@@ -24,10 +24,7 @@ object Pipeline {
         .withColumn("_path", col("_file")))
     Sinks.writeLake(decoded, lakeDir)
 
-    // competência is a zero-padded code ("0501" = 2005-01): partition-dir
-    // type inference would read it back as an int and drop the padding
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val lake = spark.read.parquet(lakeDir)
+    val lake = readLake(spark, lakeDir)
     val perTable = lake.groupBy(col("tipo_arquivo").as("tabela"))
       .agg(count(lit(1)).as("total_registros"),
            countDistinct(col("arquivo")).as("n_arquivos"),
@@ -40,6 +37,15 @@ object Pipeline {
       sum(col("n_arquivos")).as("arquivos_processados"))
     LoadReport(summary, perTable)
   }
+
+  /** The lake columns the load report reads. competência is a
+    * zero-padded code ("0501" = 2005-01) and partition-dir type inference
+    * would read it back as an int and drop the padding; an explicit
+    * schema types the partition columns as strings without touching the
+    * caller's session conf. */
+  private[graft] def readLake(spark: SparkSession, lakeDir: String): DataFrame =
+    spark.read.schema("arquivo STRING, tipo_arquivo STRING, uf STRING, competencia STRING")
+      .parquet(lakeDir)
 
   /** The reference's actual load target — a SQL database per file type
     * with duplicate-competência protection (datasus.service.ts:15-39) —

@@ -386,8 +386,8 @@ object Etl {
     * COMPOSED result under the DuckDB oracle). Two relations feed the
     * hash: the perTable report Pipeline.run itself computes, and a
     * partition audit RE-READ from the written lake (distinct uf /
-    * competência partition values through disabled type inference — the
-    * zero-padded-competência trap), so decode, partition derivation,
+    * competência partition values typed as strings by an explicit schema
+    * — the zero-padded-competência trap), so decode, partition derivation,
     * the overwrite write path, and partition-typed read-back all sit
     * under one gate row. The mean is re-derived as exact integer cents
     * (the float `round` in the report column is display-only and never
@@ -402,7 +402,7 @@ object Etl {
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val lakeDir = s"/tmp/graft_lake_gate/${key}_p${ProcessHandle.current().pid()}"
     val rep = graft.Pipeline.run(s, s"$base/RD*.dbc", lakeDir)
-    val parts = s.read.parquet(lakeDir)
+    val parts = graft.Pipeline.readLake(s, lakeDir)
       .groupBy($"tipo_arquivo".cast("string").as("tabela"))
       .agg(countDistinct($"uf").as("n_ufs"),
            countDistinct($"competencia").as("n_competencias"))

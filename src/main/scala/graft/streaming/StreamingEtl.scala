@@ -567,12 +567,6 @@ object StreamingEtl {
       val d = p.durationMs.get("triggerExecution")
       if (d == null) 0L else d.longValue()
     }.sum
-    // dev-only micro-batch decomposition dump (StreamPerfProbe reads it;
-    // same sysprop convention as graft.stream.maxFilesPerTrigger)
-    if (sys.props.get("graft.stream.debugProgress").contains("true"))
-      q.recentProgress.foreach(p => println(
-        s"[sprogress] $queryName batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durationMs=${p.durationMs}"))
     StreamMeter.addSetup(wall - execMs * 1000000L)
   }
 
